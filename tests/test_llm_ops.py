@@ -1385,7 +1385,6 @@ def test_semdedup_floor_pin_requires_safety_margin(spark, monkeypatch):
     skip it — otherwise a better-compressed corpus under-counts
     survivors and silently mis-sizes the codebook."""
     from pyspark.sql.classic.dataframe import DataFrame
-    from zolo_spark.llm import dedup as _dedup
     from zolo_spark.llm.corpus import _SEMDEDUP_EST_MIN_ROW_BYTES
 
     docs = spark.createDataFrame(
@@ -1407,14 +1406,14 @@ def test_semdedup_floor_pin_requires_safety_margin(spark, monkeypatch):
     monkeypatch.setattr(DataFrame, "count", tracked)
     # n_hi = 400: inside the floor region at 1× (400*?//64 -> wait,
     # semdedup_k(400)=8) but OUT at 2× (semdedup_k(800)=12) -> count
-    monkeypatch.setattr(_dedup, "_plan_size_estimate",
+    monkeypatch.setattr(corpus, "plan_size_estimate",
                         lambda df: 400 * _SEMDEDUP_EST_MIN_ROW_BYTES)
     corpus.corpus_pipeline(docs, emb)
     assert calls, "edge-of-floor estimate must fall back to count()"
 
     calls.clear()
     # n_hi = 200: still floor-pinned at 2× (semdedup_k(400)=8) -> skip
-    monkeypatch.setattr(_dedup, "_plan_size_estimate",
+    monkeypatch.setattr(corpus, "plan_size_estimate",
                         lambda df: 200 * _SEMDEDUP_EST_MIN_ROW_BYTES)
     corpus.corpus_pipeline(docs, emb)
     assert not calls, "comfortably-floor-pinned estimate must skip"

@@ -134,6 +134,24 @@ def test_runtime_bloom_filter_prunes_fact_fact_join(spark):
             spark.conf.set(k, v)
 
 
+@contextlib.contextmanager
+def session_conf(spark, key, value):
+    old = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def new_job_ids(spark, fn):
+    """Run ``fn`` and return the ids of the Spark jobs it launched."""
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    fn()
+    return set(tracker.getJobIdsForGroup()) - before
+
+
 def test_fan_out_widens_narrow_never_narrows_wide(spark):
     from zolo_spark.ops.partitioning import fan_out
 
@@ -146,28 +164,66 @@ def test_fan_out_widens_narrow_never_narrows_wide(spark):
     assert fan_out(wide) is wide
 
 
-def test_fan_out_heavy_estimate_branch_scale_pin(spark):
-    """fan_out_heavy (r15): widening decided purely by Catalyst's
-    free estimate — no df.rdd (which under AQE materializes upstream
-    stages). Pins BOTH directions, especially the scale invariant:
-    a frame whose estimate clears target × maxPartitionBytes — the
-    corpus-sized shape every real deployment input has — passes
-    through UNTOUCHED (the force-repartition branch must never fire
-    at scale; r14 VERDICT caveat #3)."""
-    from zolo_spark.ops.partitioning import (fan_out_heavy,
-                                             plan_size_estimate)
+def test_fan_out_decision_table_launches_no_jobs(spark, caplog):
+    """Every row of fan_out's decision table (module docstring of
+    ops/partitioning.py), each decided without a single Spark job:
+    the width comes from the optimized plan, the file index and the
+    Catalyst estimate, never from ``df.rdd``."""
+    import logging
+
+    from zolo_spark.ops.partitioning import fan_out, plan_size_estimate
 
     target = spark.sparkContext.defaultParallelism
-    # small estimate: widened regardless of current layout
+    big_agg = spark.range(2_000_000).groupBy("id").count()
+    assert plan_size_estimate(big_agg) >= target << 20
+    cases = [  # (frame, table row, widened)
+        (spark.range(1000).coalesce(1), "repartition", True),
+        (spark.range(1000).repartition(2 * target), "repartition", False),
+        (spark.range(1000).groupBy((F.col("id") % 10).alias("k")).count(),
+         "derived", True),
+        (big_agg, "derived", False),
+        (spark.read.parquet(f"{SF_DIR}/documents.parquet"), "file_scan",
+         True),
+        (spark.range(1 << 28), "big_estimate", False),
+        (spark.readStream.format("rate").load(), "streaming", False),
+    ]
+    for df, row, widened in cases:
+        caplog.clear()
+        out = []
+        with caplog.at_level(logging.DEBUG, logger="zolo_spark"):
+            jobs = new_job_ids(spark, lambda: out.append(fan_out(df)))
+        assert not jobs, row
+        (rec,) = [r for r in caplog.records
+                  if r.getMessage().startswith("fan_out ")]
+        assert rec.args[0] == row
+        assert rec.args[3] == target
+        if widened:
+            plan = out[0]._jdf.queryExecution().optimizedPlan()
+            assert plan.nodeName() == "Repartition", row
+            assert plan.numPartitions() == target, row
+        else:
+            assert out[0] is df, row
+
+
+def test_fan_out_big_estimate_scale_pin(spark):
+    """A frame whose FREE Catalyst estimate clears target ×
+    maxPartitionBytes — the corpus-sized shape every real deployment
+    input has — passes through UNTOUCHED, even at a static width below
+    target (the force-repartition branch must never fire at scale)."""
+    from zolo_spark.ops.partitioning import fan_out, plan_size_estimate
+
+    target = spark.sparkContext.defaultParallelism
+    # small estimate and narrow: widened
     small = spark.range(1000).coalesce(1)
-    assert fan_out_heavy(small).rdd.getNumPartitions() == target
+    assert fan_out(small).rdd.getNumPartitions() == target
     # estimate over the threshold: same plan object back, no exchange
     # (range rows estimate at 8 bytes each; 2 partitions stands in
     # for "already as wide as its bytes warrant")
-    thr = 2 * 128 * (1 << 20)
-    big = spark.range(thr // 8 + 1_000_000).repartition(2)
-    assert plan_size_estimate(big) > thr
-    assert fan_out_heavy(big, min_partitions=2) is big
+    with session_conf(spark, "spark.sql.files.maxPartitionBytes", "1m"):
+        thr = target * (1 << 20)
+        big = spark.range(thr // 8 + 1_000_000).repartition(2)
+        assert plan_size_estimate(big) > thr
+        assert fan_out(big) is big
     # calibration guard for the extrapolation the no-op branch relies
     # on: the real corpus tables' per-row estimate stays large enough
     # that a 100 TB-scale frame lands far beyond any plausible
@@ -178,30 +234,65 @@ def test_fan_out_heavy_estimate_branch_scale_pin(spark):
     assert est / max(n, 1) > 100  # ≥100 B/row ⇒ 10^9 rows ≫ 4 GB
 
 
-def test_fan_out_small_pins_width_of_tiny_wide_frames(spark):
-    """fan_out_small (r14): a statically-wide but TINY frame (the
-    post-shuffle shape AQE coalesces below session parallelism at
-    runtime) is force-repartitioned to the target so downstream
-    per-row compute keeps full width; a frame whose optimizer
-    estimate is big passes through untouched."""
-    from zolo_spark.ops.partitioning import fan_out_small, plan_size_estimate
+def test_fan_out_widens_tiny_aggregate(spark):
+    """A post-shuffle frame statically plans ``shuffle.partitions``
+    wide, but AQE coalesces a tiny one far below session parallelism
+    at runtime (a 1 MB floor per partition), so downstream per-row
+    compute would run on a handful of cores: fan_out widens it. A
+    frame whose estimate is big passes through untouched."""
+    from zolo_spark.ops.partitioning import fan_out, plan_size_estimate
 
     target = spark.sparkContext.defaultParallelism
-    # narrow input: same contract as fan_out
     narrow = spark.range(1000).coalesce(1)
-    assert fan_out_small(narrow).rdd.getNumPartitions() == target
+    assert fan_out(narrow).rdd.getNumPartitions() == target
 
-    # tiny but statically wide: estimate ~8 KB < target MB -> repinned
-    tiny_wide = spark.range(1000).repartition(target * 2)
-    out = fan_out_small(tiny_wide)
-    assert out is not tiny_wide
+    # tiny aggregate: estimate ~12 KB, AQE runs it as ONE partition
+    tiny_agg = spark.range(1000).groupBy((F.col("id") % 10).alias("k")).count()
+    out = fan_out(tiny_agg)
+    assert out is not tiny_agg
     assert out.rdd.getNumPartitions() == target
 
-    # big estimate (> min_partitions MB): untouched even though its
-    # static width equals the floor
-    big = spark.range(2_000_000).repartition(2)
-    assert plan_size_estimate(big) > 2 * (1 << 20)
-    assert fan_out_small(big, min_partitions=2) is big
+    # big estimate (over target × maxPartitionBytes): untouched even
+    # though its static width is below target
+    with session_conf(spark, "spark.sql.files.maxPartitionBytes", "1m"):
+        big = spark.range(2_000_000).repartition(2)
+        assert plan_size_estimate(big) > target * (1 << 20)
+        assert fan_out(big) is big
+
+
+def test_private_jvm_apis_take_the_primary_path(spark, monkeypatch):
+    """The width policy and cachereg read private JVM APIs. A Spark
+    upgrade that moves one must fail here rather than route silently
+    to a fallback."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    from zolo_spark.llm import cachereg
+    from zolo_spark.ops.partitioning import _decide, _max_partition_bytes
+
+    with session_conf(spark, "spark.sql.files.maxPartitionBytes", "64m"):
+        assert _max_partition_bytes(spark) == 64 << 20
+    target = spark.sparkContext.defaultParallelism
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    # optimizedPlan().stats(), nodeName(), children(), the file index
+    # and the split confs
+    row, est, width = _decide(docs.select("doc_id", "text"), target)
+    assert (row, width) == ("file_scan", 1) and est > 0
+    # Repartition.numPartitions / RepartitionByExpression.optNumPartitions
+    assert _decide(docs.coalesce(3), target)[::2] == ("repartition", 3)
+    assert _decide(docs.repartition(3, "doc_id"), target)[::2] == (
+        "repartition", 3)
+    # SQLConf.numShufflePartitions
+    assert _decide(docs.repartition("doc_id"), target)[::2] == (
+        "derived", 1)
+    # cacheManager().isEmpty(): with nothing cached, begin() must
+    # skip every unpersist
+    spark.catalog.clearCache()
+    unpersisted = []
+    monkeypatch.setattr(DataFrame, "unpersist",
+                        lambda self, *a, **k: unpersisted.append(self))
+    monkeypatch.setitem(cachereg._LIVE, "_api_pin", [docs])
+    cachereg.begin("_api_pin")
+    assert not unpersisted
 
 
 def test_q7_q10_dim_broadcasts_survive(spark):

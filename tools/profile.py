@@ -1,13 +1,12 @@
-"""Round-15 optimization profiler.
+"""Optimization profiler.
 
 For each named query: capture ``explain("formatted")`` to
-``plans/r15/<name>_<tag>.txt``, time the noop-sink run (same
-methodology as bench.py: warm, clearCache, timed), and report the
-scan partition counts of every stage-0 input so single-partition
-Python kernels are visible.
+``plans/rNN/<name>_<tag>.txt`` (``NN`` = ``--round``), time the
+noop-sink run (same methodology as bench.py: warm, clearCache,
+timed), and report the jobs and tasks of the first timed run.
 
 Usage:
-    python tools/profile_r15.py --only 'llm_video_frames|llm_jpeg' \
+    python tools/profile.py --round 16 --only 'llm_video_frames|llm_jpeg' \
         [--tag before] [--sf-dir /root/testdata/sf0.1] [--no-plan]
 """
 
@@ -19,7 +18,10 @@ import re
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+# replace (not prepend to) the script's own directory: left on the
+# path, this file would shadow the stdlib ``profile`` that cProfile
+# imports
+sys.path[0] = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 from zolo_spark import parity_queries  # noqa: E402
 from zolo_spark.session import get_spark  # noqa: E402
@@ -29,6 +31,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 def main() -> None:
     ap = argparse.ArgumentParser()
+    ap.add_argument("--round", type=int, required=True)
     ap.add_argument("--only", required=True)
     ap.add_argument("--tag", default="before")
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
@@ -36,10 +39,10 @@ def main() -> None:
     ap.add_argument("--reps", type=int, default=1)
     args = ap.parse_args()
 
-    plans_dir = os.path.join(REPO, "plans", "r15")
+    plans_dir = os.path.join(REPO, "plans", f"r{args.round:02d}")
     os.makedirs(plans_dir, exist_ok=True)
 
-    spark = get_spark("zolo_profile_r15")
+    spark = get_spark("zolo_profile")
     names = [n for n in sorted(parity_queries.REGISTRY)
              if re.search(args.only, n)]
     for name in names:

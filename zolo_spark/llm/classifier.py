@@ -101,18 +101,6 @@ def _sigmoid_sql(z: str) -> str:
             f"CAST({-SIGMOID_CLAMP!r} AS DOUBLE)))))")
 
 
-def _grad_components_sql(weights: list[float], label_sql: str,
-                         prefix: str) -> str:
-    """The per-feature gradient aggregates of one GD step as SQL text:
-    ``g_j = Σ round((p - y)·x_j, 6)::DECIMAL / n`` — the exact shape
-    the Column-API version built and the DuckDB oracles replay."""
-    p = _sigmoid_sql(_logit_sql(weights))
-    return ", ".join(
-        f"CAST(SUM(CAST(round(({p} - {label_sql}) * {c}, 6) "
-        f"AS DECIMAL(28,6))) AS DOUBLE) / COUNT(1) AS {prefix}{j}"
-        for j, c in enumerate(FEATURE_COLS))
-
-
 def _grad_select_sql(weight_sets: list[list[float]],
                      label_sqls: list[str], prefixes: list[str],
                      view: str, where: str = "") -> str:
@@ -202,11 +190,6 @@ def logreg_train(labeled: DataFrame, label_col: str = "label",
     # the training frame usually derives from a narrow scan (one file
     # at gate scale): widen it so the checkpoint fill (regex-heavy
     # stats) and every iteration's scan run at cluster parallelism.
-    # fan_out, NOT fan_out_small: a 20-40-iteration driver loop over a
-    # checkpointed tiny frame pays 32 scheduled tasks per iteration
-    # where 1-4 would do (r14 driver bench: logreg_minibatch 0.63x,
-    # 8-core/32-core scaling ratio 0.81 — per-iteration feature
-    # arithmetic is cheap, so forcing width is pure overhead).
     labeled = fan_out(labeled).localCheckpoint()
     w = [0.0] * len(FEATURE_COLS)
     with _gd_session(labeled, "_zs_gd_binary") as gd:
@@ -246,7 +229,6 @@ def logreg_train_minibatch(labeled: DataFrame, label_col: str = "label",
         1, 4), 16, 10).cast("long") % n_buckets)
     from ..ops.partitioning import fan_out
 
-    # fan_out, not fan_out_small — see logreg_train
     labeled = fan_out(labeled.withColumn("_mb", bucket)).localCheckpoint()
     w = [0.0] * len(FEATURE_COLS)
     with _gd_session(labeled, "_zs_gd_minibatch") as gd:
@@ -278,7 +260,6 @@ def train_ovr(labeled: DataFrame, n_classes: int, class_col: str = "cls",
     analyzes a leaf scan — see :func:`logreg_train`."""
     from ..ops.partitioning import fan_out
 
-    # fan_out, not fan_out_small — see logreg_train
     labeled = fan_out(labeled).localCheckpoint()
     d = len(FEATURE_COLS)
     ws = [[0.0] * d for _ in range(n_classes)]

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ..ops.partitioning import fan_out, plan_size_estimate
 from . import cachereg
 
 # Conservative LOWER bound on Catalyst's sizeInBytes estimate per
@@ -344,10 +345,9 @@ def decontaminate(df: DataFrame, n: int = 5, min_shared: int = 2,
     Returns (train_doc, test_doc, n_shared) sorted semantics-free;
     split assignment is :func:`hash_split`'s deterministic bucketing.
     """
-    from ..ops.partitioning import fan_out_small
     from .dedup import shingles_from_tokens
 
-    tokens = fan_out_small(hash_split(df, id_col=id_col)).select(
+    tokens = fan_out(hash_split(df, id_col=id_col)).select(
         F.col(id_col).alias("doc_id"), "split",
         F.split(F.lower(F.col(text_col)), " ").alias("t"),
     )
@@ -669,7 +669,7 @@ def corpus_pipeline(docs: DataFrame, emb: DataFrame, *,
     # COMFORTABLY inside the floor region, not just at its edge —
     # otherwise an under-estimate could silently pin k to the floor
     # for a corpus that really needs n//64 cells.
-    est = _dedup._plan_size_estimate(emb2)
+    est = plan_size_estimate(emb2)
     n_hi = est // _SEMDEDUP_EST_MIN_ROW_BYTES
     if semdedup_k(max(n_hi, 1) * _SEMDEDUP_EST_SAFETY,
                   max_k) == semdedup_k(1, max_k):

@@ -30,8 +30,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
-from ..ops.partitioning import (fan_out, fan_out_heavy, fan_out_small,
-                                plan_size_estimate)
+from ..ops.partitioning import fan_out, plan_size_estimate
 from . import cachereg
 from .text import fingerprint
 
@@ -60,18 +59,11 @@ def shingles_from_tokens(t, n: int = 3) -> Column:
     )
 
 
-def word_shingles(col, n: int = 3) -> Column:
-    """Single-expression form; prefer :func:`doc_shingles`, which
-    projects the token array first — inlined here, the regex split
-    re-runs inside every per-gram lambda element."""
-    return shingles_from_tokens(F.split(F.lower(col), " "), n)
-
-
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """Exact dedup by content fingerprint: one survivor (min id) per
     fingerprint group, with the duplicate count."""
     return (
-        fan_out_small(df).select(F.col(id_col), fingerprint(F.col(text_col)).alias("fp"))
+        fan_out(df).select(F.col(id_col), fingerprint(F.col(text_col)).alias("fp"))
         .groupBy("fp")
         .agg(F.min(id_col).alias("keep_id"), F.count(F.lit(1)).alias("n_docs"))
     )
@@ -82,18 +74,7 @@ def doc_shingles(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     """(id, shingle) exploded distinct-shingle relation. Tokenization
     is its own projection step so the split runs once per doc, not
     once per gram."""
-    # fan_out_heavy (r15), NOT fan_out_small: doc_shingles feeds
-    # build_dedup_index, whose five persisted consumers each
-    # materialize the frame — r14's forced 32-wide layout on kilobyte
-    # batches multiplied ~30 jobs × 32 tasks through the
-    # incremental-dedup gate (4.45 → 15.28 s full-suite). The
-    # estimate-only variant makes the decision plain fan_out made on
-    # every input this site actually sees (narrow scans and
-    # AQE-coalesced tiny join outputs both widen; corpus-scale inputs
-    # pass untouched) WITHOUT fan_out's df.rdd probe, which on the
-    # capstone's derived survivor frames materializes their join
-    # stages as throwaway jobs under AQE.
-    tokens = fan_out_heavy(df).select(
+    tokens = fan_out(df).select(
         F.col(id_col).alias("doc_id"),
         F.split(F.lower(F.col(text_col)), " ").alias("t"),
     )
@@ -207,19 +188,6 @@ def lsh_candidate_pairs(sigs: DataFrame, k: int = N_MINHASH,
 JACCARD_PRUNE_MIN_EST = 5_000_000
 
 
-def _plan_size_estimate(df: DataFrame) -> int:
-    """Catalyst's sizeInBytes estimate of the optimized plan — FREE
-    (no Spark job; the r10 version ran an eager ``count()`` per
-    verify call, one whole extra job paid by every LSH/ngram caller).
-    Used only to pick between two bit-identical plans, so estimate
-    error costs time, never correctness. A frame whose cache already
-    materialized reports real cached bytes (~50-100× the scan
-    estimate) and flips to the prune path early — the scale-safe
-    direction; every engine caller decides before materializing.
-    Canonical implementation lives in :mod:`..ops.partitioning`."""
-    return plan_size_estimate(df)
-
-
 def jaccard_verify(pairs: DataFrame, shingles: DataFrame,
                    threshold: float = 0.7,
                    scope: str | None = None,
@@ -249,7 +217,7 @@ def jaccard_verify(pairs: DataFrame, shingles: DataFrame,
     so the pruning path's pair lineage (a band self-join) isn't
     re-executed for the candidate-id pass; ``prune`` forces."""
     if prune is None:
-        prune = _plan_size_estimate(shingles) >= JACCARD_PRUNE_MIN_EST
+        prune = plan_size_estimate(shingles) >= JACCARD_PRUNE_MIN_EST
     if not prune:
         sets = shingles.groupBy("doc_id").agg(
             F.collect_list("shingle").alias("sh"))
@@ -326,12 +294,7 @@ def _content_classes(df: DataFrame, text_col: str, id_col: str):
     signature-level computation done once per class representative is
     valid for every member.  ``members`` = (doc_id, rep);
     ``reps`` = the representative rows of ``df`` (min doc_id)."""
-    # fan_out_heavy (see doc_shingles): one md5 per row is cheap
-    # compute, but the inputs here are whole documents (the md5 reads
-    # every byte) and several callers pass DERIVED frames whose
-    # df.rdd probe would materialize join stages; the estimate-only
-    # decision matches plain fan_out's on every input this site sees.
-    classed = fan_out_heavy(df).select(
+    classed = fan_out(df).select(
         F.col(id_col).alias("doc_id"), F.md5(F.col(text_col)).alias("_cls")
     )
     rep_of = classed.groupBy("_cls").agg(F.min("doc_id").alias("rep"))
@@ -837,7 +800,7 @@ def simhash_neardup(df: DataFrame, text_col: str = "text",
             return simhash_neardup_pairwise(
                 df, text_col, id_col, bits, max_hamming)
     members, reps = _content_classes(df, text_col, id_col)
-    hashed = fan_out_small(reps).select(
+    hashed = fan_out(reps).select(
         F.col(id_col).alias("doc_id"),
         token_hashes(F.col(text_col), hex_chars=max(4, (bits + 3) // 4))
         .alias("th"),
@@ -904,7 +867,7 @@ def simhash_neardup_pairwise(df: DataFrame, text_col: str = "text",
                              max_hamming: int = 2) -> DataFrame:
     """The naive all-docs pairwise form — the semantic reference the
     collapse-first implementation is pinned against."""
-    hashed = fan_out_small(df).select(
+    hashed = fan_out(df).select(
         F.col(id_col).alias("doc_id"),
         token_hashes(F.col(text_col), hex_chars=max(4, (bits + 3) // 4))
         .alias("th"),
@@ -952,7 +915,7 @@ def simhash_dedup(df: DataFrame, text_col: str = "text",
     near-dup banding over signature halves is the scale extension).
     Token hashes are projected in their own step so the md5 transform
     runs once, not once per bit-fold."""
-    hashed = fan_out_small(df).select(
+    hashed = fan_out(df).select(
         F.col(id_col).alias("doc_id"), token_hashes(F.col(text_col)).alias("th")
     )
     return (
@@ -1008,7 +971,7 @@ def embedding_near_dup(df: DataFrame, vec_col: str = "embedding",
     # dot/(na*nb) evaluates the exact expression trees the inline form
     # did, so results are bit-identical (oracle unchanged).
     dv = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    keyed = fan_out_small(df).select(
+    keyed = fan_out(df).select(
         F.col(id_col).alias("vid"),
         dv.alias("v"),
         F.sqrt(F.aggregate(F.transform(dv, lambda x: x * x),
@@ -1059,7 +1022,7 @@ def duplicate_spans(df: DataFrame, n: int = 10, min_count: int = 2,
     because each position appears exactly once regardless of how hot
     its gram is.  All-integer output.
     """
-    toks = fan_out_small(df).select(
+    toks = fan_out(df).select(
         F.col(id_col).alias("doc_id"),
         F.split(F.lower(F.col(text_col)), " ").alias("t"),
     )
@@ -1253,13 +1216,12 @@ def edit_distance_pairs_pairwise(df: DataFrame, str_col: str = "text",
     (e.g. after :func:`exact_dedup`)."""
     d = max_dist
     k = d + 1
-    # fan_out_heavy: the index/probe builds explode every row into
-    # d+1 / O(d²·(2d+1)) substring keys — heavy per-row compute that
+    # the index/probe builds explode every row into d+1 /
+    # O(d²·(2d+1)) substring keys — heavy per-row compute that
     # otherwise runs on the scan's layout (a single-file corpus = ONE
     # task, measured as the gate's two 0.7–1.4 s single-task
-    # broadcast builds). Estimate-decided, so no df.rdd probe on the
-    # collapse-first caller's join lineage.
-    base = fan_out_heavy(
+    # broadcast builds)
+    base = fan_out(
         df.select(F.col(id_col).alias("doc_id"),
                   F.col(str_col).alias("s"))
         .filter(F.col("s").isNotNull())
@@ -1354,7 +1316,7 @@ def remove_duplicate_spans(df: DataFrame, n: int = 10,
         F.collect_list(
             F.struct(F.col("start_tok").alias("s"),
                      F.col("end_tok").alias("e"))).alias("spans"))
-    toks = fan_out_small(df).select(
+    toks = fan_out(df).select(
         F.col(id_col).alias("doc_id"),
         F.split(F.col(text_col), " ").alias("t"),
     )

@@ -69,13 +69,12 @@ def hashed_ngram_features(df: DataFrame, text_col: str = "text",
     ngrams = F.concat(t, bigrams)
     bucket = (F.conv(F.substring(F.md5(F.col("ngram")), 1, 4), 16, 10)
               .cast("long") % buckets)
-    from ..ops.partitioning import fan_out_small
+    from ..ops.partitioning import fan_out
 
     # the ngram explode + per-gram md5 is the CPU-heavy pass; widen a
-    # narrow/tiny input so it runs at cluster parallelism (no-op at
-    # scale — see fan_out_small)
+    # narrow input so it runs at cluster parallelism
     return (
-        fan_out_small(df)
+        fan_out(df)
         .select(F.col(id_col).alias("doc_id"),
                 F.explode(ngrams).alias("ngram"))
         .select("doc_id", bucket.alias("bucket"))

@@ -46,10 +46,10 @@ def unigram_lm(df: DataFrame, text_col: str = "text") -> DataFrame:
     scored token has a count).  For scoring held-out text, join with
     a left join and coalesce to a floor logprob.
     """
-    from ..ops.partitioning import fan_out_small
+    from ..ops.partitioning import fan_out
 
     counts = (
-        fan_out_small(df).select(F.explode(_tokens(text_col)).alias("token"))
+        fan_out(df).select(F.explode(_tokens(text_col)).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("n"))
     )
@@ -70,9 +70,9 @@ def doc_nll(df: DataFrame, lm: DataFrame, text_col: str = "text",
     The LM side is broadcast (vocabulary ≪ corpus), so token skew is
     irrelevant and the single shuffle is the per-document aggregate.
     """
-    from ..ops.partitioning import fan_out_small
+    from ..ops.partitioning import fan_out
 
-    toks = fan_out_small(df).select(
+    toks = fan_out(df).select(
         F.col(id_col), F.explode(_tokens(text_col)).alias("token"))
     nll = F.round(-F.col("logp"), 6).cast("decimal(28,6)")
     n = F.count(F.lit(1))

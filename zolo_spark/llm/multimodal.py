@@ -31,7 +31,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
-from ..ops.partitioning import fan_out_small
+from ..ops.partitioning import fan_out
 
 MEDIA_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType(), False),
@@ -322,7 +322,7 @@ def documents_png(documents: DataFrame) -> DataFrame:
                 "meta": metas,
             })
 
-    return fan_out_small(documents.select("doc_id")).mapInPandas(
+    return fan_out(documents.select("doc_id")).mapInPandas(
         kernel, schema=MEDIA_SCHEMA)
 
 
@@ -487,7 +487,7 @@ def documents_wav(documents: DataFrame, rate: int = 8000) -> DataFrame:
                 "media_id": pdf["doc_id"], "content": contents, "meta": metas,
             })
 
-    return fan_out_small(documents.select("doc_id")).mapInPandas(
+    return fan_out(documents.select("doc_id")).mapInPandas(
         kernel, schema=MEDIA_SCHEMA)
 
 
@@ -880,7 +880,7 @@ def documents_jpeg(documents: DataFrame, quality: int = 50) -> DataFrame:
                 "media_id": pdf["doc_id"], "content": contents, "meta": metas,
             })
 
-    return fan_out_small(documents.select("doc_id")).mapInPandas(
+    return fan_out(documents.select("doc_id")).mapInPandas(
         kernel, schema=MEDIA_SCHEMA)
 
 
@@ -1211,7 +1211,7 @@ def documents_jpeg_color(documents: DataFrame, quality: int = 50) -> DataFrame:
                 "media_id": pdf["doc_id"], "content": contents, "meta": metas,
             })
 
-    return fan_out_small(documents.select("doc_id")).mapInPandas(
+    return fan_out(documents.select("doc_id")).mapInPandas(
         kernel, schema=MEDIA_SCHEMA)
 
 
@@ -1379,7 +1379,7 @@ def documents_zvid(documents: DataFrame) -> DataFrame:
                 "meta": metas,
             })
 
-    return fan_out_small(documents.select("doc_id")).mapInPandas(
+    return fan_out(documents.select("doc_id")).mapInPandas(
         kernel, schema=MEDIA_SCHEMA)
 
 
@@ -1697,7 +1697,7 @@ def documents_gif(documents: DataFrame) -> DataFrame:
                 "meta": metas,
             })
 
-    return fan_out_small(documents.select("doc_id")).mapInPandas(
+    return fan_out(documents.select("doc_id")).mapInPandas(
         kernel, schema=MEDIA_SCHEMA)
 
 

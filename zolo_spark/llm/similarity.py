@@ -17,7 +17,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F, types as T
 
-from ..ops.partitioning import fan_out_heavy, fan_out_small
+from ..ops.partitioning import fan_out
 from . import cachereg
 from .dedup import cosine
 
@@ -49,7 +49,7 @@ def brute_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
     )
-    c = fan_out_small(corpus).select(
+    c = fan_out(corpus).select(
         F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv")
     )
     scored = (
@@ -181,15 +181,7 @@ def kmeans_train(corpus: DataFrame, k: int = 8, iters: int = 2,
                            F.lit(0.0), lambda acc, x: acc + x)),
         F.lit(1e-12),
     )
-    # fan_out_heavy, NOT fan_out_small: ``base`` is persisted and
-    # re-scanned once per Lloyd iteration from a driver loop — forcing
-    # 32 partitions on a tiny ALREADY-WIDE persisted frame schedules
-    # 32 tasks per iteration for sub-MB blocks (r14 driver bench:
-    # ivf_trained_topk 0.80×, scaling ratio 0.97). The estimate-based
-    # widening only rescues narrow layouts (same decision plain
-    # fan_out made here) without fan_out's df.rdd probe, which under
-    # AQE materializes the corpus lineage's stages as throwaway jobs.
-    base = fan_out_heavy(corpus).select(
+    base = fan_out(corpus).select(
         F.col(id_col).alias("vec_id"),
         F.transform(dv, lambda x: x / nrm).alias("v"),
     ).persist()
@@ -301,11 +293,8 @@ def semdedup(corpus: DataFrame, centroids: np.ndarray,
     # the pandas-UDF assignment AND the whole O(N²/C) dot-fold on ONE
     # task (measured 13 s of single-core CPU inside the capstone's
     # broadcast build; pair_blocks only helps when the join shuffles).
-    # fan_out_heavy: estimate-decided, so no df.rdd stage
-    # materialization; at real scale the estimate is corpus-sized and
-    # this is a no-op.
     idx = (
-        ivf_index(fan_out_heavy(corpus), centroids, vec_col, id_col)
+        ivf_index(fan_out(corpus), centroids, vec_col, id_col)
         .select(
             "neighbor_id", "cell", dv.alias("v"),
             F.sqrt(F.aggregate(F.transform(dv, lambda x: x * x),

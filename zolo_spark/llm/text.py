@@ -8,13 +8,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-# fan_out_heavy (r15), was fan_out_small (r14): all three sites
-# feed regex-/explode-heavy per-row compute, and fan_out_small's
-# df.rdd width probe MATERIALIZES a derived caller's lineage under
-# AQE (3 concurrent ~0.4 s throwaway jobs per text_stats(surv3)
-# call in the capstone). The estimate-only variant makes the same
-# widen decision at these sites without the probe.
-from ..ops.partitioning import fan_out_heavy
+from ..ops.partitioning import fan_out
 
 # BPE-ish pretokenizer: letter runs, digit runs, single non-space symbols
 TOKEN_REGEX = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
@@ -116,7 +110,7 @@ def fingerprint(col) -> Column:
 def text_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
     """One-pass document statistics table."""
     c = F.col(text_col)
-    return fan_out_heavy(df).select(
+    return fan_out(df).select(
         id_col,
         F.length(c).alias("n_chars"),
         token_count_ws(c).alias("n_tokens_ws"),
@@ -167,7 +161,7 @@ def pii_redact(df: DataFrame, text_col: str = "text",
                id_col: str = "doc_id") -> DataFrame:
     """Per-doc PII counts + the redacted text."""
     c = F.col(text_col)
-    return fan_out_heavy(df).select(
+    return fan_out(df).select(
         id_col,
         *[cnt.alias(name) for name, cnt in pii_counts(c)],
         mask_pii(c).alias("masked_text"),
@@ -201,7 +195,7 @@ def repetition_stats(df: DataFrame, text_col: str = "text",
     partial aggregation, no per-doc maps held in memory, so a 100 TB
     corpus streams through. All ratios are exact integer divisions.
     """
-    base = fan_out_heavy(df).select(
+    base = fan_out(df).select(
         F.col(id_col).alias("doc_id"), tokens(F.col(text_col)).alias("t")
     )
 

@@ -28,7 +28,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from ..ops.partitioning import fan_out_small
+from ..ops.partitioning import fan_out
 
 END = "</w>"  # end-of-word marker, per the published algorithm
 
@@ -36,7 +36,7 @@ END = "</w>"  # end-of-word marker, per the published algorithm
 def word_freqs(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Distinct-word frequency relation — the one corpus-sized pass."""
     return (
-        fan_out_small(df)
+        fan_out(df)
         .select(F.explode(F.split(F.lower(F.col(text_col)), " ")).alias("w"))
         .filter(F.col("w") != "")
         .groupBy("w").agg(F.count(F.lit(1)).alias("freq"))

@@ -1,23 +1,73 @@
-"""Partition-shape helpers.
+"""Partition-width policy: one :func:`fan_out`.
 
 Parquet scan parallelism follows file bytes (``maxPartitionBytes``),
 which is the right default when cost ∝ bytes. The text/vector
 operators break that assumption: a few MB of documents fan out into
 millions of shingle grams / hash folds, so a single-file table plans
 one scan task and serializes the whole CPU-bound pipeline on one
-core. ``fan_out`` widens such inputs to the cluster's parallelism
-before the expensive projection — one cheap shuffle of the raw rows
-buys full-width execution of everything downstream.
+core. :func:`fan_out` sits directly above such per-row work and
+widens a narrow input to the session's parallelism — one cheap
+shuffle of the raw rows buys full-width execution of everything
+downstream.
 
-At 100 TB the corpus arrives in thousands of files and the scan is
-already wide, so ``fan_out`` is a no-op there by construction (it
-only repartitions when the plan is narrower than the session's
-default parallelism).
+The decision reads only free inputs — Catalyst's ``sizeInBytes``
+estimate, the optimized logical plan, the scan's file index and
+session confs — and launches no Spark job. (``df.rdd`` would: under
+AQE it materializes every upstream shuffle/broadcast stage just to
+report a partition count.)
+
+``target`` = ``defaultParallelism``; ``W`` = the width the frame will
+run at. Repartition to ``target`` iff ``W < target``, else return
+``df`` as is.
+
+============================  ==========================================
+input                         ``W``
+============================  ==========================================
+streaming frame               untouched — partition shape is the
+                              source's concern
+estimate ≥ ``target ×         untouched — wide by construction: scans
+maxPartitionBytes``           split files at ``maxPartitionBytes``, and
+                              AQE keeps post-shuffle frames that big
+                              near session parallelism
+root, through narrow unary    ``n`` — AQE never coalesces an explicit
+nodes, is a ``Repartition``   partition count
+/ ``RepartitionByExpression``
+with a fixed count ``n``
+(incl. ``coalesce(n)``)
+root reaches a file scan      Spark's split count: the ``maxSplitBytes``
+through narrow nodes only     rule over the scan's file bytes, file
+                              count and ``maxPartitionBytes``
+anything else (aggregate,     ``min(shuffle.partitions, ⌈estimate /
+join, window, union,          1 MB⌉)`` — AQE's coalescing floor
+repartition by column,
+in-memory data)
+============================  ==========================================
+
+Narrow unary nodes are the ones that keep their child's partitions
+(projections, filters, generators, samples, Python UDF evaluation).
+Each decision emits one DEBUG record on the ``zolo_spark`` logger
+carrying the row taken, the estimate, ``W`` and ``target``.
+
+At 100 TB the corpus arrives in thousands of files and its estimate
+clears the second row, so :func:`fan_out` is a no-op there by
+construction. Estimate error costs one small exchange or a narrow
+stage, never correctness: every branch returns the same rows.
 """
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame
+
+_log = logging.getLogger("zolo_spark")
+
+# unary logical nodes that run at their child's width
+_NARROW = frozenset({"Project", "Filter", "Generate", "Sample",
+                     "ArrowEvalPython", "BatchEvalPython",
+                     "MapInPandas", "MapInArrow"})
+# spark.sql.adaptive.coalescePartitions.minPartitionSize default
+_AQE_MIN_PARTITION_BYTES = 1 << 20
 
 
 def plan_size_estimate(df: DataFrame) -> int:
@@ -28,106 +78,72 @@ def plan_size_estimate(df: DataFrame) -> int:
                .stats().sizeInBytes())
 
 
+def _sql_conf(spark):
+    return spark._jsparkSession.sessionState().conf()
+
+
 def _max_partition_bytes(spark) -> int:
     """``spark.sql.files.maxPartitionBytes`` as an exact byte count
     however the conf string spells it."""
-    try:
-        return int(spark._jsparkSession.sessionState().conf()
-                   .filesMaxPartitionBytes())
-    except Exception:
-        return 128 * 1024 * 1024
+    return int(_sql_conf(spark).filesMaxPartitionBytes())
 
 
-def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
-    """Repartition ``df`` up to ``min_partitions`` (default: the
-    session's ``defaultParallelism``) iff it currently plans fewer —
-    never narrows an already-wide plan.
-
-    A frame whose FREE Catalyst estimate clears
-    ``target × maxPartitionBytes`` short-circuits untouched: at that
-    size it necessarily executes wide (scans split files at
-    ``maxPartitionBytes``; AQE's parallelism-first coalescing keeps
-    post-shuffle frames that big near session parallelism), and the
-    short-circuit avoids ``df.rdd`` — which under AQE MATERIALIZES
-    every upstream shuffle/broadcast stage just to read the partition
-    count. On a derived frame at deploy scale that would run most of
-    the query twice; the estimate check caps the probe's cost at one
-    small materialization by construction."""
-    if df.isStreaming:  # partition shape is the source's concern
-        return df
-    sc = df.sparkSession.sparkContext
-    target = min_partitions or sc.defaultParallelism
-    if plan_size_estimate(df) >= target * _max_partition_bytes(
-            df.sparkSession):
-        return df
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
+def _scan_width(spark, relation) -> int:
+    """Partitions Spark plans for a scan of ``relation``: files split
+    at ``FilePartition.maxSplitBytes``, then packed greedily with an
+    open cost per split — computed for files of the mean size."""
+    conf = _sql_conf(spark)
+    location = relation.location()
+    total = int(location.sizeInBytes())
+    n_files = max(len(location.inputFiles()), 1)
+    open_cost = int(conf.filesOpenCostInBytes())
+    min_parts = conf.filesMinPartitionNum()
+    min_parts = (min_parts.get() if min_parts.isDefined()
+                 else spark._jsparkSession.leafNodeDefaultParallelism())
+    split = min(_max_partition_bytes(spark),
+                max(open_cost, (total + n_files * open_cost) // min_parts))
+    size = total // n_files
+    chunks = max(-(-size // split), 1)
+    tail = size - (chunks - 1) * split
+    # full-size chunks fill a partition each; tails share one
+    tails_per_part = 1 + (split - tail) // max(tail + open_cost, 1)
+    return n_files * (chunks - 1) + -(-n_files // tails_per_part)
 
 
-def fan_out_heavy(df: DataFrame,
-                  min_partitions: int | None = None) -> DataFrame:
-    """:func:`fan_out` for frames feeding HEAVY compute (pairwise
-    folds, Arrow-UDF matmuls), decided purely from Catalyst's FREE
-    ``sizeInBytes`` estimate — never ``df.rdd``, which under AQE
-    materializes every upstream shuffle/broadcast stage just to read
-    the partition count (measured: one ``fan_out`` on a semi-join
-    lineage = three concurrent ~0.5 s jobs in the capstone, thrown
-    away and re-run by the real action).
-
-    Decision: estimate under ``target × maxPartitionBytes`` ⇒
-    repartition. Why that threshold is safe in both directions: a
-    frame estimated LARGER necessarily executes wide already — scans
-    split files at ``maxPartitionBytes``, and AQE's parallelism-first
-    coalescing keeps post-shuffle frames that size near the session
-    parallelism — so skipping the repartition never strands a big
-    frame narrow. A frame estimated smaller gets one sub-
-    ``target×128 MB`` exchange, trivial next to the compute these
-    sites feed (a false positive costs that exchange; at 100 TB the
-    estimate is corpus-sized, so the branch never fires). NOT for
-    cheap-per-row sites: there the forced width costs more than it
-    buys (the r14 ``fan_out_small`` lesson) — use :func:`fan_out`.
-    """
+def _decide(df: DataFrame, target: int) -> tuple[str, int | None, int | None]:
+    """(table row, estimate, W) for ``df`` — see the module docstring."""
     if df.isStreaming:
-        return df
+        return "streaming", None, None
     spark = df.sparkSession
-    target = min_partitions or spark.sparkContext.defaultParallelism
-    if plan_size_estimate(df) < target * _max_partition_bytes(spark):
-        return df.repartition(target)
-    return df
+    plan = df._jdf.queryExecution().optimizedPlan()
+    est = int(plan.stats().sizeInBytes())
+    if est >= target * _max_partition_bytes(spark):
+        return "big_estimate", est, None
+    node = plan
+    while node.nodeName() in _NARROW:
+        node = node.children().apply(0)
+    name = node.nodeName()
+    if name == "Repartition":
+        return "repartition", est, int(node.numPartitions())
+    if (name == "RepartitionByExpression"
+            and node.optNumPartitions().isDefined()):
+        return "repartition", est, int(node.optNumPartitions().get())
+    if (name == "LogicalRelation" and node.relation().getClass()
+            .getSimpleName() == "HadoopFsRelation"):
+        return "file_scan", est, _scan_width(spark, node.relation())
+    shuffle = int(_sql_conf(spark).numShufflePartitions())
+    return "derived", est, min(shuffle, -(-est // _AQE_MIN_PARTITION_BYTES))
 
 
-def fan_out_small(df: DataFrame,
-                  min_partitions: int | None = None) -> DataFrame:
-    """:func:`fan_out` for CPU-bound per-row operators: ALSO pins the
-    width of a statically-wide but TINY frame.
-
-    A post-shuffle frame statically plans ``shuffle.partitions``-wide,
-    but AQE's runtime coalescing (``parallelismFirst`` floors at
-    ``minPartitionSize`` = 1 MB) merges a small frame far below the
-    session parallelism — and then every downstream per-row operator
-    (regex stats, codec kernels, hash folds, shingle hashing)
-    executes on a handful of cores no matter what the static plan
-    said. A frame whose optimizer estimate is under ``target``
-    advisory-floor partitions is therefore force-repartitioned: a
-    false positive costs one sub-MB exchange, a false negative keeps
-    the existing layout, and at real scale the estimate is
-    corpus-sized so the branch never fires. Unlike :func:`fan_out`
-    this may override a deliberately wider layout, so it belongs
-    directly above expensive per-row compute, not in generic plumbing.
-    """
-    if df.isStreaming:
-        return df
-    sc = df.sparkSession.sparkContext
-    target = min_partitions or sc.defaultParallelism
-    # same big-estimate short-circuit as fan_out: definitely wide, and
-    # df.rdd on a big derived frame would materialize upstream stages
-    if plan_size_estimate(df) >= target * _max_partition_bytes(
-            df.sparkSession):
-        return df
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    if plan_size_estimate(df) < target * (1 << 20):
+def fan_out(df: DataFrame) -> DataFrame:
+    """Repartition ``df`` to the session's ``defaultParallelism`` iff
+    it will run narrower; otherwise return ``df`` itself. Launches no
+    Spark job — decision table in the module docstring."""
+    target = df.sparkSession.sparkContext.defaultParallelism
+    row, est, width = _decide(df, target)
+    _log.debug("fan_out row=%s estimate=%s width=%s target=%s",
+               row, est, width, target)
+    if width is not None and width < target:
         return df.repartition(target)
     return df
 

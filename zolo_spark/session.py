@@ -48,7 +48,3 @@ def get_spark(app_name: str = "zolo_spark", cpus: int | None = None) -> SparkSes
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
-
-def testdata_dir(sf: str = "0.001") -> str:
-    """Path of the driver-provided synthetic test tables."""
-    return os.environ.get("SPARK_GRAFT_SF_DIR", f"/root/testdata/sf{sf}")
